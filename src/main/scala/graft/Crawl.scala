@@ -165,9 +165,10 @@ object Crawl {
       warmCache = warmCache,
       ssrfCheck = ssrfCheck)
     engine.run(stopAfterFetchEpoch = stopAfterFetchEpoch)
-    // post-scrape pipeline over the committed ok pages (page_cache carries
-    // exactly the ok markdown, one row per urlNorm) — snapshot table, so a
-    // re-run replaces it; skipped when the crawl was paused mid-flight
+    // post-scrape pipeline over the committed ok pages (the page_cache
+    // projection of order_log: the ok markdown, one row per urlNorm) —
+    // snapshot table, so a re-run replaces it; skipped when the crawl was
+    // paused mid-flight
     if (postprocess && stopAfterFetchEpoch.isEmpty)
       graft.operators.Postprocess.commitChunks(spark, engine, tableIo, chunkCleaner)
     engine

@@ -64,6 +64,7 @@ final class CrawlEngine(
     ssrfCheck: String => Boolean = u => !graft.operators.Ssrf.isSsrf(u)) {
 
   import spark.implicits._
+  import CrawlEngine.PendingEpoch
 
   // one seed per host — the reference runs ONE base_url per job
   // (api/models.py JobRequest.url); two seeds on a host would silently
@@ -178,6 +179,12 @@ final class CrawlEngine(
       case _ => None
     })
 
+  /** An Observation's Long metrics as commit counters; a lost one degrades
+    * to no counters, with observedWithin's warning. */
+  private def observedCounts(o: Observation, what: String): Map[String, Long] =
+    observedWithin(o, what).map(_.collect { case (k, v: Long) => k -> v })
+      .getOrElse(Map.empty)
+
   /** Drop the per-epoch broadcast Bloom copies. Called on pause/stop exits
     * and at phase end, not just the happy path: a paused job held by the
     * JobManager must not pin |seen|/|level|-sized Blooms on the executors
@@ -194,10 +201,10 @@ final class CrawlEngine(
       stopAfterDepth: Option[Int] = None): Boolean = {
     var depth = startDepth
     var level = startLevel
-    // exact |level| for candidate-Bloom sizing in the scale regime: carried
-    // from each epoch's level_next write observation; -1 = unknown (run
-    // start / resume / lost observation) → one count() fallback when needed
-    var levelRows = -1L
+    // |level| for candidate-Bloom sizing in the scale regime: the seed
+    // count at depth 0, then each level_next write's observation; -1 =
+    // unknown (resume / lost observation) → one count() fallback
+    var levelRows = if (startDepth == 0) cfg.seedUrls.size.toLong else -1L
     var continue = true
     while (continue) {
       if (stopFlagged) { dropAdmissionBroadcasts(); return false }
@@ -237,9 +244,9 @@ final class CrawlEngine(
             if (seenBloomBc != null) seenBloomBc.unpersist()
             seenBloomBc = spark.sparkContext.broadcast(seenBloom)
             if (candBloomBc != null) { candBloomBc.unpersist(); candBloomBc = null }
-            // candidate-Bloom sizing: exact level count carried from the
-            // previous epoch's level_next write observation; the count()
-            // fallback fires once per run (resume / first scale epoch).
+            // candidate-Bloom sizing: level count carried from the previous
+            // epoch's level_next write observation (the seed count at depth
+            // 0); the count() fallback fires at most once per resume.
             // Sizing is non-semantic — undersizing only degrades pruning.
             if (levelRows < 0)
               levelRows = described("level count: scale-admission sizing")(
@@ -372,21 +379,20 @@ final class CrawlEngine(
           $"host", urlfns.url_path($"urlNorm")))
       else filtered
     // F8 relevance stage (semi-join-validated scorer; Identity default
-    // reproduces the reference's sorted dispatch order exactly)
-    val pending = graft.operators.Relevance.prioritize(admitted, scorer).cache()
-    val pendingCount = // materialize once before the write
-      described("fetch/0 prioritize")(pending.count())
-    commitTracked("fetch", 0, tables = Map("pending" -> pending),
-      counters = Map("pending" -> pendingCount))
-    pending.unpersist()
+    // reproduces the reference's sorted dispatch order exactly); its eager
+    // localCheckpoint runs here, the pending write is the one other action
+    val pending = described("fetch/0 prioritize")(
+      graft.operators.Relevance.prioritize(admitted, scorer))
+    val obs = Observation("fetch_init_pending")
+    commitTracked("fetch", 0,
+      tables = Map("pending" -> pending.observe(obs, count(lit(1)).as("pending"))),
+      counters = observedCounts(obs, "fetch/0 pending") + (PendingEpoch -> 0L))
   }
 
-  private val dequeuedSchema = StructType(Seq(StructField("urlNorm", StringType)))
-
   /** Carried cross-epoch content-hash Bloom (J2): built from the committed
-    * seen_content once per run/resume, folded with each epoch's ok delta —
-    * most epochs have no cross-epoch duplicate candidates, so the exact
-    * confirm (and its seen_content scan) is skipped for the bulk of rows. */
+    * order_log's ok rows once per run/resume, folded with each epoch's ok
+    * delta — most epochs have no cross-epoch duplicate candidates, so the
+    * exact confirm (and its order_log scan) is skipped for the bulk of rows. */
   private var contentBloom: org.apache.spark.util.sketch.BloomFilter = null
   private var contentBloomBc: org.apache.spark.broadcast.Broadcast[
     org.apache.spark.util.sketch.BloomFilter] = null
@@ -409,29 +415,37 @@ final class CrawlEngine(
     }
   }
 
-  /** The live frontier: committed base ∖ accumulated per-epoch dequeue
-    * deltas. Each fetch epoch APPENDS its dequeued urlNorms (commit I/O
-    * proportional to the epoch's dequeue, not the frontier — the 10^10-URL
-    * requirement); every cfg.compactEveryEpochs epochs the view is
-    * materialized back into `pending` and the delta chain reset, bounding
-    * the anti-join's right side at K × budget × hosts rows. */
-  private def pendingView: DataFrame = {
+  /** Fetch epoch of the last `pending` rewrite (0 = fetchInit); every fetch
+    * commit records it as the [[CrawlEngine.PendingEpoch]] counter. */
+  private var pendingEpoch = 0
+
+  /** The ok rows of a committed order_log (content dedup, `page_cache`). */
+  private def okPagesOf(log: DataFrame): DataFrame = log.where($"disposition" === "ok")
+
+  /** The live frontier: committed base ∖ the order_log rows dispatched
+    * after it was written. Each fetch epoch only APPENDS its order_log
+    * rows (commit I/O proportional to the epoch's dequeue, not the
+    * frontier — the 10^10-URL requirement); every cfg.compactEveryEpochs
+    * epochs the view is materialized back into `pending`, bounding the
+    * anti-join's right side at K × budget × hosts rows. */
+  private def pendingView(log: Option[DataFrame]): DataFrame = {
     val base = io.read("pending").get
-    io.read("dequeued")
-      .map(dq => base.join(dq, Seq("urlNorm"), "left_anti"))
+    log.map(l => base.join(l.where($"epoch" > pendingEpoch).select("urlNorm"),
+        Seq("urlNorm"), "left_anti"))
       .getOrElse(base)
   }
 
   /** Returns (dequeued rows, frontier rows REMAINING after this epoch;
     * -1 when unknown). The remaining count lets [[fetchFrom]] skip the
     * final all-empty epoch (a full dequeue+classify action that commits
-    * nothing) — round 6. Conservative by construction: the pending count
-    * rides an Observation, and any loss/recompute inflation only makes
-    * remaining look LARGER, which runs an extra (correct, empty) epoch —
-    * never skips one that had work. */
+    * nothing). Both counts ride Observations, so `remaining` is only a
+    * hint: a transport that returns a page twice inflates the dequeue
+    * count and can drive it to 0 early — [[fetchFrom]] confirms a 0 with
+    * a probe of the committed frontier before it stops. */
   private def fetchEpoch(epoch: Int): (Long, Long) = {
+    val log = io.read("order_log")
     val obsPending = Observation(s"fetch_epoch_${epoch}_pending")
-    val pending = pendingView.observe(obsPending, count(lit(1)).as("rows"))
+    val pending = pendingView(log).observe(obsPending, count(lit(1)).as("rows"))
     // cached but NOT counted here: the dequeue size rides the classified
     // observation below (round-3 ask — one driver action per epoch); the
     // cache populates inside that same action and the commit appends read it
@@ -528,25 +542,25 @@ final class CrawlEngine(
 
     // J2 content dedup, host-scoped, priority order decides the keeper:
     // within-batch winner per (host, hash), then cross-epoch check against
-    // prior epochs' seen_content. The cross-epoch check is Bloom-gated
+    // prior epochs' ok order_log rows. The cross-epoch check is Bloom-gated
     // (carried filter folded with each epoch's delta) and the exact
     // confirm uses the tiny-left anti shape — per-epoch cost is
-    // O(dequeue) + a seen_content scan only when the Bloom flags possible
-    // duplicates, never a full seen_content shuffle.
-    val seenContent = io.read("seen_content").getOrElse(emptyDf(StructType(Seq(
-      StructField("host", StringType), StructField("contentHash", StringType)))))
+    // O(dequeue) + an order_log scan only when the Bloom flags possible
+    // duplicates, never a full order_log shuffle.
     val winners = pages
       .where(isHtmlOk && !$"blocked")
       .withColumn("dupRank", row_number().over(
         Window.partitionBy($"host", $"contentHash").orderBy($"priority")))
       .where($"dupRank" === 1)
-    if (contentBloom == null && !seenContent.isEmpty)
+    // no emptiness probe: an empty committed order_log builds an empty
+    // Bloom, whose all-negative probes leave every winner fresh
+    if (contentBloom == null) log.foreach { l =>
       contentBloom = described("bloom rebuild: content snapshot")(
-        Seen.buildBloom(
-          seenContent.select(contentKey.as("urlNorm")),
+        Seen.buildBloom(okPagesOf(l).select(contentKey.as("urlNorm")),
           cfg.bloomExpectedItems, cfg.bloomFpp))
-    val okRows = (if (contentBloom == null) winners
-      else {
+    }
+    val okRows = (log match {
+      case Some(l) if contentBloom != null =>
         if (contentBloomBc != null) contentBloomBc.unpersist()
         contentBloomBc = spark.sparkContext.broadcast(contentBloom)
         val bc = contentBloomBc
@@ -555,8 +569,9 @@ final class CrawlEngine(
         val fresh = flagged.where(!$"__maybe").drop("__maybe")
         val possible = flagged.where($"__maybe").drop("__maybe")
         fresh.unionByName(Seen.antiJoinTinyLeft(
-          possible, seenContent, Seq("host", "contentHash")))
-      })
+          possible, okPagesOf(l).select("host", "contentHash"), Seq("host", "contentHash")))
+      case _ => winners // no committed page yet: every winner is fresh
+    })
       .select($"urlNorm").withColumn("disp_ok", lit(true))
 
     val obsKeys = Observation(s"fetch_epoch_${epoch}_keys")
@@ -598,16 +613,9 @@ final class CrawlEngine(
     // above), (d) the dequeue size arrives without its own job.
     described(s"fetch/$epoch dequeue+fetch+classify")(classified.count())
 
-    // counters degrade (with observedWithin's warning) but never silently:
-    // an epoch without counters means the metrics pipeline broke, not that
-    // nothing happened — and deqCount has its own count-on-cache fallback
-    def observed(o: Observation, what: String): Map[String, Long] =
-      observedWithin(o, s"fetch/$epoch $what")
-        .map(_.collect { case (k, v: Long) => k -> v })
-        .getOrElse(Map.empty)
     // obs fired on the count above; read it NOW for the termination test.
     // (A lost observation degrades to one extra count on the cache.)
-    val dispCounts = observed(obs, "disposition")
+    val dispCounts = observedCounts(obs, s"fetch/$epoch disposition")
     val deqCount = dispCounts.getOrElse("dequeued",
       described(s"fetch/$epoch dequeue count (obs lost)")(classified.count()))
     // frontier rows left for the NEXT epoch (pending view size at epoch
@@ -623,12 +631,25 @@ final class CrawlEngine(
       return (0L, remaining)
     }
 
+    // THE page record of the epoch: one row per dispatched URL — dispatch
+    // order and disposition, then the page observation (payload only on
+    // ok rows) and `cachedEpoch`, the TTL clock a later run's warm cache
+    // ages rows against. Cache HITS keep the donor's clock (coalesce) —
+    // re-stamping them would reset the TTL on every chained run and the
+    // page would never re-fetch.
+    val isOk = $"disposition" === "ok"
     val orderLogNew = classified.select(
-      $"host", $"priority", $"urlNorm", $"disposition",
-      $"fetchMethod".as("fetchMethod"), lit(epoch).as("epoch"))
+      Seq($"host", $"priority", $"urlNorm", $"disposition", $"fetchMethod",
+        lit(epoch).as("epoch"), $"contentHash") ++
+      Fetcher.pageObservationSchema.fieldNames
+        .filterNot(Set("urlNorm", "host", "fetchMethod"))
+        .map(c => if (Set("content", "links", "navLinks", "imageRefs")(c))
+          when(isOk, col(c)).as(c) else col(c)) :+
+      when(isOk, coalesce($"__donorEpoch", lit(epoch).cast("long")).cast("int"))
+        .as("cachedEpoch"): _*)
 
     // J7 — explode image refs, join the image table, validate per-row
-    val okPages = classified.where($"disposition" === "ok")
+    val okPages = classified.where(isOk)
     val refs = okPages.select($"urlNorm", $"fetchMethod", $"loadMs",
       explode($"imageRefs").as("image_id"))
     val idNum = regexp_extract($"image_id", "(\\d+)", 1).cast("long")
@@ -658,50 +679,22 @@ final class CrawlEngine(
         count(when(!$"validPixels" || !$"validCaption", 1)).as("invalid_rows"))
       .cache()
 
-    // delta-append the dequeued set; materialize (compact) only every K
-    // epochs — What's-wrong #2 fix: no O(frontier) rewrite per epoch
+    // the frontier is the order_log delta over `pending`; materialize it
+    // (compact) only every K epochs — no O(frontier) rewrite per epoch
     val compact = epoch % cfg.compactEveryEpochs == 0
-    val (pendingTables, dequeuedAppend) =
-      if (compact)
-        (Map(
-          "pending" -> pending.join(deq.select("urlNorm"), Seq("urlNorm"), "left_anti"),
-          "dequeued" -> emptyDf(dequeuedSchema)),
-          Map.empty[String, DataFrame])
-      else
-        (Map.empty[String, DataFrame],
-          Map("dequeued" -> deq.select("urlNorm")))
-
-    // per-partition lineage (north rule): rows in/ok per host bucket this
-    // epoch — the partition key the tables are bucketed by at rest
-    val lineage = classified
-      .groupBy(graft.functions.Hashing.hostBucket($"host", cfg.numBuckets).as("partitionId"))
-      .agg(count(lit(1)).as("rowsIn"),
-        count(when($"disposition" === "ok", 1)).as("rowsOk"))
-      .withColumn("epoch", lit(epoch))
-      .withColumn("phase", lit("fetch"))
-
+    val nextPendingEpoch = if (compact) epoch else pendingEpoch
     commitTracked("fetch", epoch,
-      tables = pendingTables,
-      appends = dequeuedAppend ++ Map(
+      tables = if (!compact) Map.empty else Map(
+        "pending" -> pending.join(deq.select("urlNorm"), Seq("urlNorm"), "left_anti")),
+      appends = Map(
         "order_log" -> orderLogNew,
-        "seen_content" -> okPages.select($"host", $"contentHash"),
-        // S9 — page-cache sink: ok pages only (never blocked/failed),
-        // reusable as `warmCache` by a later crawl; `cachedEpoch` is the
-        // TTL clock a consuming run ages rows against. Cache HITS keep
-        // the donor's clock (coalesce) — re-stamping them would reset the
-        // TTL on every chained run and the page would never re-fetch
-        "page_cache" -> okPages.select(
-          (Fetcher.pageObservationSchema.fieldNames.map(col) :+
-            col("__donorEpoch")).toIndexedSeq: _*)
-          .withColumn("cachedEpoch", // int like always (readers cast up)
-            coalesce($"__donorEpoch", lit(epoch).cast("long")).cast("int"))
-          .drop("__donorEpoch"),
-        "ledger" -> lineage,
         "fetched" -> fetchedNew.drop("validPixels", "validCaption")),
       // by-name: obsImg is populated by the `fetched` data write inside the
       // commit, so it is read AFTER the writes — zero extra jobs.
       // dispCounts (incl. "dequeued") already fired on the classified count.
-      counters = dispCounts ++ observed(obsImg, "image") + ("dequeued" -> deqCount))
+      counters = dispCounts ++ observedCounts(obsImg, s"fetch/$epoch image") +
+        ("dequeued" -> deqCount) + (PendingEpoch -> nextPendingEpoch.toLong))
+    pendingEpoch = nextPendingEpoch
     pagesOkTotal += dispCounts.getOrElse("pages_ok", 0L) // committed only
     // fold this epoch's ok (host, hash) delta into the carried Bloom —
     // from the observation when statically small (no job), else via the
@@ -728,16 +721,22 @@ final class CrawlEngine(
   }
 
   private def fetchFrom(startEpoch: Int, stopAfterEpoch: Option[Int]): Unit = {
+    pendingEpoch = io.lastCounters.getOrElse(PendingEpoch, throw new IllegalStateException(
+      s"no $PendingEpoch counter in the last commit: this state dir predates " +
+        "the order_log page record and cannot be resumed"))
+      .toInt
     var epoch = startEpoch
     var continue = true
     while (continue && !cancelRequested && !stopRequested) {
       val (n, remaining) = fetchEpoch(epoch)
       if (n == 0) continue = false
-      // frontier provably drained: the next epoch would dequeue zero and
-      // commit nothing — skip its full dequeue+fetch+classify action
-      // (round 6; identical committed state, one fewer epoch of driver
-      // fixed cost). remaining == -1 (lost observation) runs it normally.
-      else if (remaining == 0L) continue = false
+      // frontier drained: the next epoch would dequeue zero and commit
+      // nothing — skip its full dequeue+fetch+classify action. `remaining`
+      // rides Observations (a duplicated transport row inflates the
+      // dequeue count), so a labeled probe of the committed frontier
+      // confirms it; remaining == -1 (lost observation) runs it normally.
+      else if (remaining == 0L && described(s"fetch/$epoch dequeue: drained probe")(
+          pendingView(io.read("order_log")).isEmpty)) continue = false
       else if (stopAfterEpoch.contains(epoch)) continue = false
       else epoch += 1
     }
@@ -765,17 +764,15 @@ final class CrawlEngine(
       // base_url before ANY strategy runs (discovery.py:539) — private-IP
       // seeds must not get their sitemaps expanded into `seen`.
       val safeSeeds = seedByHost.filter { case (_, seed) => ssrfCheck(seed) }
-      val expanded = graft.sources.Sitemaps
-        .expandAll(sm, safeSeeds, policies = policies)
-        .where(ssrfAdmitted($"urlNorm"))
-        .withColumn("depth", lit(0))
-        .cache()
-      val expandedCount = // materialize once before the write
-        described("cascade sitemap expand")(expanded.count())
+      // the index walk collects its edges here; the page URLs are parsed
+      // by the commit write, the one action over the expansion
+      val expanded = described("cascade sitemap expand")(
+        graft.sources.Sitemaps.expandAll(sm, safeSeeds, policies = policies))
+      val obs = Observation("sitemap_urls")
       commitTracked("sitemap", 0, tables = Map.empty,
-        appends = Map("seen" -> expanded),
-        counters = Map("sitemap_urls" -> expandedCount))
-      expanded.unpersist()
+        appends = Map("seen" -> expanded.where(ssrfAdmitted($"urlNorm"))
+          .withColumn("depth", lit(0)).observe(obs, count(lit(1)).as("sitemap_urls"))),
+        counters = observedCounts(obs, "sitemap expand"))
     }
 
   /** Seeds of hosts not already discovered via an earlier cascade strategy
@@ -809,13 +806,11 @@ final class CrawlEngine(
       .withColumn("rn", row_number().over(Window.partitionBy("host").orderBy("urlNorm")))
       .where($"rn" <= 100)
       .select($"urlNorm", $"host", lit(0).as("depth"))
-      .cache()
-    val navCount = // materialize ONCE: the commit write below
-      described("cascade nav parse")(nav.count())
-    commitTracked("nav", 0, tables = Map.empty, // must not re-run the fetch
-      appends = Map("seen" -> nav),
-      counters = Map("nav_urls" -> navCount))
-    nav.unpersist()
+    // the commit write is the one action over the seed-page fetches
+    val obs = Observation("nav_urls")
+    commitTracked("nav", 0, tables = Map.empty,
+      appends = Map("seen" -> nav.observe(obs, count(lit(1)).as("nav_urls"))),
+      counters = observedCounts(obs, "nav parse"))
   }
 
   // ST3 — cancellation: inter-epoch stop flags AND in-flight Spark-job
@@ -932,8 +927,7 @@ final class CrawlEngine(
     seenBloom = null
     contentBloom = null
     seenTotal = -1L // re-count per run: cascades/other runs may have appended
-    if (seenBloomBc != null) { seenBloomBc.unpersist(); seenBloomBc = null }
-    if (candBloomBc != null) { candBloomBc.unpersist(); candBloomBc = null }
+    dropAdmissionBroadcasts()
     if (contentBloomBc != null) { contentBloomBc.unpersist(); contentBloomBc = null }
     graft.operators.Preflight.validate(spark, fetcher, scorer) // F10
     spark.sparkContext.setJobGroup(jobGroup, "graft crawl engine",
@@ -967,8 +961,10 @@ final class CrawlEngine(
     * that accounting (everything lumps under the job group's description).
     * Commit writes label themselves in TableIO. */
   private def described[T](desc: String)(action: => T): T = {
-    spark.sparkContext.setJobDescription(desc)
-    try action finally spark.sparkContext.setJobDescription(null)
+    val sc = spark.sparkContext
+    val previous = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try action finally sc.setJobDescription(previous)
   }
 
   /** Honors a pause/cancel flag at a strategy boundary: the cascades are
@@ -981,35 +977,24 @@ final class CrawlEngine(
 
   private def runResume(stopAfterFetchEpoch: Option[Int],
       stopAfterDiscoverDepth: Option[Int]): Unit = {
+    def fetchAll(): Unit = { fetchInit(); fetchFrom(1, stopAfterFetchEpoch) }
+    def discoverThenFetch(depth: Int, level: DataFrame): Unit =
+      if (discoverFrom(depth, level, stopAfterDiscoverDepth)) fetchAll()
     io.lastCommitted match {
       case None =>
         if (stopFlagged) return
         cascadeSitemaps()
         if (stopFlagged) return
         cascadeNav()
-        if (discoverFrom(0, bfsSeedLevel, stopAfterDiscoverDepth)) {
-          fetchInit()
-          fetchFrom(1, stopAfterFetchEpoch)
-        }
+        discoverThenFetch(0, bfsSeedLevel)
       case Some(("sitemap", _)) =>
         if (stopFlagged) return
         cascadeNav()
-        if (discoverFrom(0, bfsSeedLevel, stopAfterDiscoverDepth)) {
-          fetchInit()
-          fetchFrom(1, stopAfterFetchEpoch)
-        }
-      case Some(("nav", _)) =>
-        if (discoverFrom(0, bfsSeedLevel, stopAfterDiscoverDepth)) {
-          fetchInit()
-          fetchFrom(1, stopAfterFetchEpoch)
-        }
+        discoverThenFetch(0, bfsSeedLevel)
+      case Some(("nav", _)) => discoverThenFetch(0, bfsSeedLevel)
       case Some(("discover", d)) =>
         val nxt = io.read("level_next").get
-        val done = if (!nxt.isEmpty) discoverFrom(d + 1, nxt, stopAfterDiscoverDepth) else true
-        if (done) {
-          fetchInit()
-          fetchFrom(1, stopAfterFetchEpoch)
-        }
+        if (nxt.isEmpty) fetchAll() else discoverThenFetch(d + 1, nxt)
       case Some(("fetch", e)) =>
         fetchFrom(e + 1, stopAfterFetchEpoch)
       case Some(("postprocess", _)) | Some(("complete", _)) =>
@@ -1022,7 +1007,22 @@ final class CrawlEngine(
   def orderLog: DataFrame = io.read("order_log").get
   def seen: DataFrame = io.read("seen").get
   def fetched: DataFrame = io.read("fetched").get
-  def table(name: String): Option[DataFrame] = io.read(name)
+
+  /** A committed table, or one of the two projections of `order_log`:
+    *  - `page_cache` — the ok pages (page-observation columns +
+    *    `cachedEpoch`), reusable as `warmCache` by a later crawl;
+    *  - `ledger` — per-partition lineage (north rule): rows in/ok per host
+    *    bucket and fetch epoch, the partition key the tables are bucketed
+    *    by at rest. */
+  def table(name: String): Option[DataFrame] = name match {
+    case "page_cache" => io.read("order_log").map(l => okPagesOf(l).select(
+      (Fetcher.pageObservationSchema.fieldNames :+ "cachedEpoch").map(col).toIndexedSeq: _*))
+    case "ledger" => io.read("order_log").map(_
+      .groupBy(Hashing.hostBucket($"host", cfg.numBuckets).as("partitionId"), $"epoch")
+      .agg(count(lit(1)).as("rowsIn"), count(when($"disposition" === "ok", 1)).as("rowsOk"))
+      .select($"partitionId", $"rowsIn", $"rowsOk", $"epoch", lit("fetch").as("phase")))
+    case _ => io.read(name)
+  }
 
   /** Last committed counters / (phase, epoch): both come from the
     * in-process cache (zero backend reads per poll — on Iceberg a backend
@@ -1053,6 +1053,9 @@ object CrawlEngine {
     * vanishing. */
   val knownMethods: Seq[String] =
     Seq("native", "proxy", "http_fast", "playwright", "cache", "ssrf_blocked", "none")
+
+  /** Fetch-commit counter: the fetch epoch of the last `pending` rewrite. */
+  val PendingEpoch = "pending_epoch"
 
   /** Deadline for reading an Observation after its action completed.
     * Delivery is normally milliseconds behind the action (async listener

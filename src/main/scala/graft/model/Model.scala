@@ -82,9 +82,10 @@ final case class CrawlConfig(
     /** Bloom filter sizing for the seen-set probe (A5). */
     bloomExpectedItems: Long = 1000000L,
     bloomFpp: Double = 1e-3,
-    /** fetch-phase frontier compaction period: the pending table is stored
-      * as base ∖ appended dequeue deltas and rewritten only every K epochs,
-      * so per-epoch commit I/O is O(dequeued), not O(frontier). */
+    /** fetch-phase frontier compaction period: the frontier is the pending
+      * table ∖ the order_log rows appended since its last rewrite, and the
+      * pending table is rewritten only every K epochs, so per-epoch commit
+      * I/O is O(dequeued), not O(frontier). */
     compactEveryEpochs: Int = 8,
     /** When an epoch's Bloom-delta key count is STATICALLY bounded below
       * this (politeness budgets / per-host caps × hosts), the delta is

@@ -33,33 +33,43 @@ private[operators] object SinkFiles {
 
   /** Stream one output file: open `dir/_temporary/<name>.attempt-<id>`,
     * hand the caller a counting stream (ONE record/entry in memory at a
-    * time is the caller's contract), then commit via rename. Returns
-    * (final path, bytes written). */
+    * time is the caller's contract), then commit via rename and drop the
+    * `_temporary/` dir once no sibling attempt is left in it. Returns
+    * (final path, bytes written). The write goes through a private
+    * FileSystem instance: turning checksums off on the JVM-wide cached one
+    * would silently stop `.crc` sidecars for every other writer. */
   def writeCommitted(conf: Configuration, dir: String, fileName: String,
       attemptId: Long)(write: OutputStream => Unit): (String, Long) = {
     val finalPath = new Path(dir, fileName)
-    val tmp = new Path(new Path(dir, "_temporary"),
-      s"$fileName.attempt-$attemptId")
-    val fs: FileSystem = finalPath.getFileSystem(conf)
-    fs.setWriteChecksum(false) // no .crc sidecars on the local/checksum FS
-    fs.mkdirs(tmp.getParent)
-    val out = new CountingOutputStream(fs.create(tmp, true))
-    var ok = false
-    try { write(out); ok = true } finally {
-      try out.close() finally {
-        if (!ok) { // failed mid-write: drop the partial temp, keep dir clean
-          try fs.delete(tmp, false) catch { case _: java.io.IOException => () }
+    val tmpDir = new Path(dir, "_temporary")
+    val tmp = new Path(tmpDir, s"$fileName.attempt-$attemptId")
+    val fs = FileSystem.newInstance(finalPath.toUri, conf)
+    try {
+      fs.setWriteChecksum(false) // no .crc sidecars on the local/checksum FS
+      // a sibling task may remove the empty temp dir between our mkdirs
+      // and create: retry the create once
+      def open() = { fs.mkdirs(tmpDir); fs.create(tmp, true) }
+      val out = new CountingOutputStream(
+        try open() catch { case _: java.io.FileNotFoundException => open() })
+      var ok = false
+      try { write(out); ok = true } finally {
+        try out.close() finally {
+          if (!ok) { // failed mid-write: drop the partial temp, keep dir clean
+            try fs.delete(tmp, false) catch { case _: java.io.IOException => () }
+          }
         }
       }
-    }
-    if (!fs.rename(tmp, finalPath)) {
-      if (fs.exists(finalPath)) {
-        // a sibling attempt committed first — byte-identical by the sink's
-        // determinism contract; discard ours and report the winner's file
-        try fs.delete(tmp, false) catch { case _: java.io.IOException => () }
-      } else throw new java.io.IOException(
-        s"sink commit failed: rename $tmp -> $finalPath")
-    }
-    (finalPath.toString, out.count)
+      if (!fs.rename(tmp, finalPath)) {
+        if (fs.exists(finalPath)) {
+          // a sibling attempt committed first — byte-identical by the sink's
+          // determinism contract; discard ours and report the winner's file
+          try fs.delete(tmp, false) catch { case _: java.io.IOException => () }
+        } else throw new java.io.IOException(
+          s"sink commit failed: rename $tmp -> $finalPath")
+      }
+      // non-recursive: refuses while a sibling attempt still writes there
+      try fs.delete(tmpDir, false) catch { case _: java.io.IOException => () }
+      (finalPath.toString, out.count)
+    } finally fs.close()
   }
 }

@@ -68,13 +68,16 @@ object Sitemaps {
     } catch { case _: Exception => (Seq.empty, Seq.empty) }
   }
 
-  /** Multi-host distributed sitemap expansion: parse every sitemap body
-    * once (distributed map), iterate sitemap-index children until none
-    * remain (bounded join loop — the same epoch shape as the crawl), then
-    * apply the reference's per-URL admission (`discovery.py:459-465`):
-    * RAW netloc equality with the seed host (case-sensitive, pre-normalize),
-    * base-path prefix on the rstrip'd raw path (skipped when the base path
-    * is root), then `normalize_url`.
+  /** Multi-host sitemap expansion: the sitemap→children edges are
+    * collected once (one row per sitemap FILE, never per page URL), the
+    * index cascade is walked on the driver with the same `maxRounds` bound
+    * as [[expandPure]]'s recursion, and the page URLs of every reached
+    * sitemap are returned as ONE lazy projection (parsed on the executors)
+    * that the caller's commit write materializes. The reference's per-URL
+    * admission (`discovery.py:459-465`) follows: RAW netloc equality with
+    * the seed host whose chain reached the sitemap (case-sensitive,
+    * pre-normalize), base-path prefix on the rstrip'd raw path (skipped
+    * when the base path is root), then `normalize_url`.
     *
     * `sitemaps`: (sitemap_url, body binary, gzipped boolean);
     * `seeds`: host → baseUrl. Roots tried per host: the standard
@@ -88,17 +91,11 @@ object Sitemaps {
       policies: Map[String, graft.operators.Robots.Policy] = Map.empty): DataFrame = {
     val spark = sitemaps.sparkSession
     import spark.implicits._
-    val parsed = sitemaps.select($"sitemap_url", $"body", $"gzipped")
+    val bodies = sitemaps.select($"sitemap_url", $"body", $"gzipped")
       .as[(String, Array[Byte], Boolean)]
-      .map { case (u, b, gz) => val (urls, children) = parse(b, gz); (u, urls, children) }
-      .toDF("sitemap_url", "urls", "children")
-      .cache()
-    val seedRows = seeds.toSeq.sortBy(_._1).map { case (host, baseUrl) =>
-      val bp = graft.util.PyUrl.urlparse(baseUrl)
-      var basePath = bp.path; while (basePath.endsWith("/")) basePath = basePath.dropRight(1)
-      (host, basePath)
-    }
-    val seedsDf = broadcast(seedRows.toDF("host", "basePath"))
+    val edges: Map[String, Seq[String]] = bodies
+      .map { case (u, b, gz) => (u, parse(b, gz)._2) }
+      .collect().groupBy(_._1).view.mapValues(_.toSeq.flatMap(_._2)).toMap
     // every sitemap carries the SEED HOST whose chain reached it: the
     // reference admits a URL only when its netloc equals the host whose
     // expansion discovered it (expandPure parity) — without the tag, a URL
@@ -108,31 +105,30 @@ object Sitemaps {
       (standardRoots(baseUrl) ++
         policies.get(h).map(_.sitemaps.toSeq).getOrElse(Seq.empty)).map(u => (u, h))
     }.distinct
-    var pending = roots.toDF("sitemap_url", "seedHost")
-    var visited = pending
-    var collected = Seq.empty[DataFrame]
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val visited = scala.collection.mutable.HashSet.from(roots)
+    val reached = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    var frontier = roots
     var round = 0
-    var continue = true
-    while (continue && round < maxRounds) {
-      val batch = pending.join(parsed, Seq("sitemap_url")).cache()
-      cached += batch
-      collected :+= batch.select($"seedHost", explode($"urls").as("url"))
-      val children = batch
-        .select(explode($"children").as("sitemap_url"), $"seedHost").distinct()
-        .join(visited, Seq("sitemap_url", "seedHost"), "left_anti")
-      if (children.isEmpty) continue = false
-      else { visited = visited.unionByName(children); pending = children; round += 1 }
+    while (frontier.nonEmpty && round < maxRounds) {
+      val batch = frontier.filter { case (u, _) => edges.contains(u) }
+      reached ++= batch
+      frontier = batch.flatMap { case (u, h) => edges(u).map(_ -> h) }.distinct
+        .filter(visited.add)
+      round += 1
     }
-    if (continue) // never silent: dropped children diverge from expandPure
+    if (frontier.nonEmpty) // never silent: dropped children diverge from expandPure
       System.err.println(s"[graft] WARN sitemap expansion truncated at " +
         s"$maxRounds rounds; deeper index children were not followed")
-    if (collected.isEmpty) {
-      (parsed +: cached.toSeq).foreach(_.unpersist())
-      return spark.emptyDataset[(String, String)].toDF("urlNorm", "host")
-    }
-    val all = collected.reduce(_ unionByName _)
-    val result = all
+    val seedsDf = broadcast(seeds.toSeq.sortBy(_._1).map { case (host, baseUrl) =>
+      var basePath = graft.util.PyUrl.urlparse(baseUrl).path
+      while (basePath.endsWith("/")) basePath = basePath.dropRight(1)
+      (host, basePath)
+    }.toDF("host", "basePath"))
+    bodies.toDF()
+      .join(broadcast(reached.toSeq.toDF("sitemap_url", "seedHost")), Seq("sitemap_url"))
+      .select($"seedHost", $"body", $"gzipped").as[(String, Array[Byte], Boolean)]
+      .flatMap { case (h, b, gz) => parse(b, gz)._1.map(h -> _) }
+      .toDF("seedHost", "url")
       .withColumn("host", urlfns.url_host($"url")) // RAW netloc, pre-normalize
       .where($"host" === $"seedHost") // chain-origin equality (discovery.py:459)
       .withColumn("rawPath", regexp_replace(urlfns.url_path($"url"), "/+$", ""))
@@ -140,9 +136,6 @@ object Sitemaps {
       .where($"basePath" === "" || startswith($"rawPath", $"basePath"))
       .select(urlfns.url_canonicalize($"url").as("urlNorm"), $"host")
       .distinct()
-      .localCheckpoint(true) // materialize, then release the round caches
-    (parsed +: cached.toSeq).foreach(_.unpersist())
-    result
   }
 
   /** Standard sitemap roots for a seed, scheme inherited from the seed

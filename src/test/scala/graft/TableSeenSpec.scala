@@ -270,7 +270,7 @@ class TableSeenSpec extends SparkSpec {
       graft.fixtures.FixtureGen.imagesDF(spark, params), io,
       graft.fixtures.FixtureGen.robotsMap(params))
     engine.run()
-    val ledger = io.read("ledger").get
+    val ledger = engine.table("ledger").get
     assert(ledger.columns.toSet == Set("partitionId", "rowsIn", "rowsOk", "epoch", "phase"))
     val totalIn = ledger.agg(sum("rowsIn")).as[Long].head()
     assert(totalIn == engine.orderLog.count()) // lineage accounts every dispatch
